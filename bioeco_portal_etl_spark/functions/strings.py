@@ -8,9 +8,10 @@ Reference parity (citations into /root/reference):
   - shorten_identifier      -> notebooks/index.Rmd:353-359
   - null_quote       -> notebooks/export_in_obis.R:10
 
-Everything is a pure Column expression except the optional UTF-8->ASCII
-transliteration step of slugify, which is a pandas UDF over a small static map
-(the reference uses iconv TRANSLIT; we cover the Latin-1/Latin-2 accent range).
+Everything is a pure Column expression, including the UTF-8->ASCII
+transliteration step of slugify: ``translate`` plus ``regexp_replace`` over a
+small static map (the reference uses iconv TRANSLIT; we cover the
+Latin-1/Latin-2 accent range).
 """
 
 from __future__ import annotations

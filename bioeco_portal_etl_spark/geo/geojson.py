@@ -7,20 +7,20 @@ Reference parity:
 
 Strategy: GeoJSON FeatureCollections held in a string column are parsed with
 ``from_json`` + ``explode`` — declarative, codegen-friendly, no Python. The
-geometry of each feature is re-serialized as compact GeoJSON (to_json) and/or
-converted to WKT with a pandas UDF (coordinate arrays are ragged, so the WKT
-rendering of arbitrary nesting is Python; it is Arrow-batched and only used on
-geometry-bearing rows).
+geometry of each feature stays a compact JSON string and is converted to WKT
+with built-in expressions too: ``from_json`` reads ``coordinates`` as a string,
+which hands back the raw (Jackson re-serialized) coordinate text whatever its
+nesting depth, and WKT is a text rewrite of it — ``[x,y(,z)]`` -> ``x y``,
+then ``[]`` -> ``()``. Numbers keep Jackson's rendering (Java
+``Double.toString``): the same text as Python's for integers and
+|x| in [1e-3, 1e7); outside that range it is exponent form (``1.0E-5``),
+which ``geo.shapefile.parse_wkt`` reads to the same double.
 """
 
 from __future__ import annotations
 
-import json
-
-import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
-from pyspark.sql.functions import pandas_udf
 
 # Schema for a FeatureCollection: geometry kept as raw JSON string so ragged
 # coordinate nesting survives (coordinates depth differs per geometry type).
@@ -58,6 +58,8 @@ def explode_feature_collection(
     )
 
 
+# Pure-Python rendering of a parsed geometry: the reference the tests hold
+# geojson_to_wkt to.
 def _ring_to_wkt(coords) -> str:
     return "(" + ", ".join(f"{p[0]} {p[1]}" for p in coords) + ")"
 
@@ -87,42 +89,76 @@ def _geojson_geom_to_wkt(geom: dict) -> str:
     return None
 
 
-# pandas UDFs are built lazily (first call) — decorating at import time would
-# require an active SparkSession just to import this module.
-def _wkt_conv(geom_json: "pd.Series") -> "pd.Series":
-    def conv(s):
-        if s is None:
-            return None
-        try:
-            return _geojson_geom_to_wkt(json.loads(s))
-        except (ValueError, TypeError, IndexError, KeyError):
-            return None
+# One geometry's fields; ``coordinates`` as a string keeps the raw nesting.
+# GeometryCollection members are read one level deep.
+_GEOM_SCHEMA = (
+    "struct<type:string, coordinates:string, "
+    "geometries:array<struct<type:string, coordinates:string>>>"
+)
+# array depth of ``coordinates`` per geometry type
+_DEPTH = {
+    "POINT": 1,
+    "MULTIPOINT": 2,
+    "LINESTRING": 2,
+    "MULTILINESTRING": 3,
+    "POLYGON": 3,
+    "MULTIPOLYGON": 4,
+}
+# a position [x,y] or [x,y,z]: z is dropped
+_POSITION = r"\[([^\[\],]+),([^\[\],]+)(?:,[^\[\],]+)*\]"
+# an array element that is not a rewritten "x y" position (short or ragged)
+_BARE_ELEMENT = r"(^|[\[,])[^\[\], ]+([\],]|$)"
 
-    return geom_json.map(conv)
 
-
-def _type_conv(geom_json: "pd.Series") -> "pd.Series":
-    def conv(s):
-        if s is None:
-            return None
-        try:
-            return json.loads(s).get("type", "").upper()
-        except (ValueError, TypeError, AttributeError):
-            return None
-
-    return geom_json.map(conv)
+def _coords_wkt(gtype: Column, coords: Column) -> Column:
+    """WKT of one non-collection geometry from its upper-cased type and raw
+    coordinate text; null for an unknown type or coordinates whose depth or
+    positions do not fit the type (the Python rendering raises there)."""
+    body = F.regexp_replace(coords, _POSITION, "$1 $2")
+    depth = F.create_map(*[F.lit(x) for kv in _DEPTH.items() for x in kv])
+    want = F.try_element_at(depth, gtype)  # null for an unknown type
+    # the run of "[" before the first number must be the type's depth
+    lead = F.regexp_extract(coords, r"^(\[*)[^\[\]]", 1)
+    fits = F.when(coords == "[]", want.isNotNull()).otherwise(F.length(lead) == want)
+    ok = fits & ~body.rlike(_BARE_ELEMENT)
+    text = F.regexp_replace(F.translate(body, "[]", "()"), ",", ", ")
+    point = F.when(
+        F.coalesce(coords, F.lit("[]")) == "[]", F.lit("POINT EMPTY")
+    ).when(ok, F.concat(F.lit("POINT ("), text, F.lit(")")))
+    return F.when(gtype == "POINT", point).when(
+        ok, F.concat(gtype, F.lit(" "), text)
+    )
 
 
 def geojson_to_wkt(col: Column | str) -> Column:
-    """Arrow-batched GeoJSON-geometry-string -> WKT."""
-    c = F.col(col) if isinstance(col, str) else col
-    return pandas_udf(_wkt_conv, "string")(c)
+    """GeoJSON-geometry-string -> WKT, all built-in expressions.
+
+    Null, ``"null"``, malformed JSON, a missing or unknown ``type`` and
+    ill-shaped coordinates give null. 3-D positions drop z; an empty Point is
+    ``POINT EMPTY``. A GeometryCollection renders its members (one level: a
+    nested collection, or any member that renders null, makes it null)."""
+    g = F.from_json(_col(col), _GEOM_SCHEMA)
+    gtype = F.upper(g["type"])
+    members = F.transform(
+        g["geometries"], lambda m: _coords_wkt(F.upper(m["type"]), m["coordinates"])
+    )
+    collection = F.when(
+        ~F.coalesce(F.exists(members, lambda w: w.isNull()), F.lit(False)),
+        F.concat(
+            F.lit("GEOMETRYCOLLECTION ("),
+            F.coalesce(F.array_join(members, ", "), F.lit("")),
+            F.lit(")"),
+        ),
+    )
+    return F.when(gtype == "GEOMETRYCOLLECTION", collection).otherwise(
+        _coords_wkt(gtype, g["coordinates"])
+    )
 
 
 def geojson_geom_type(col: Column | str) -> Column:
-    """st_geometry_type for GeoJSON-string geometries."""
-    c = F.col(col) if isinstance(col, str) else col
-    return pandas_udf(_type_conv, "string")(c)
+    """st_geometry_type for GeoJSON-string geometries: the upper-cased
+    ``type``; null when the string is null or not a JSON object with one."""
+    return F.upper(F.from_json(_col(col), "struct<type:string>")["type"])
 
 
 def union_points_geojson_agg(lon: Column | str, lat: Column | str) -> Column:

@@ -44,9 +44,10 @@ def layer_table_from_geojson(
     geojson_sf() accepts both (index.Rmd:408).
 
     Composition: from_json + posexplode (geo/geojson) for collections, a
-    zero-parse passthrough for bare geometries -> pandas-UDF WKT rendering
-    on geometry-bearing rows only -> homogeneity filter comes from the
-    caller via geom_type (A5/F5, the mixed-collection skip rule)."""
+    zero-parse passthrough for bare geometries -> built-in WKT rendering
+    (geo/geojson.geojson_to_wkt; no Python UDF, the plan stays in the JVM)
+    -> homogeneity filter comes from the caller via geom_type (A5/F5, the
+    mixed-collection skip rule)."""
     from bioeco_portal_etl_spark.geo.geojson import (
         explode_feature_collection,
         geojson_to_wkt,

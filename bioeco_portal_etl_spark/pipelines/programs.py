@@ -268,6 +268,13 @@ def eov_associations(
 def in_obis_statements(
     df: DataFrame, status_map: dict[str, str], name_col: str = "name"
 ) -> DataFrame:
-    """The export_in_obis.R flow (P6 recode -> P19 quote -> K8 script)."""
+    """The export_in_obis.R flow (P6 recode -> P19 quote -> K8 script).
+
+    Statements come in ``id`` order (the combined frame's, which is the
+    reference's frame order) when the frame has one: programs may share a
+    name with different statuses, so which update runs last must not depend
+    on the physical plan."""
     recoded = df.withColumn("__status", recode("in_obis", status_map, default_passthrough=False))
+    if "id" in df.columns:
+        recoded = recoded.orderBy("id")
     return sql_update_script(recoded, "layers_layer", "data_in_obis", "__status", name_col)

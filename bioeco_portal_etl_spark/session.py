@@ -46,6 +46,19 @@ def get_spark(
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # Arrow for the few pandas-UDF paths (geo transform, multimodal decode)
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        # --- Python <-> JVM boundary ---
+        # PySpark captures the Python call site of every Column built with
+        # pyspark.sql.functions for DataFrame error contexts, costing ~11
+        # extra py4j round trips per call (F.col: 14 -> 3); plan building
+        # is call-heavy, so it is off. Errors still name the failing
+        # expression, only not the Python line that built it.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        # SQL UDF runners (pandas UDFs, applyInPandas*) add a
+        # SPARK_SIMPLIFIED_TRACEBACK env var to their workers when this is
+        # on; the worker env keys the Python daemon, so they would start a
+        # second daemon beside the RDD one. Off: one daemon per executor,
+        # and UDF errors carry the full Python traceback.
+        .config("spark.sql.execution.pyspark.udf.simplifiedTraceback.enabled", "false")
         .config(
             "spark.sql.shuffle.partitions",
             str(

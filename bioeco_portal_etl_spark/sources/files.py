@@ -4,8 +4,8 @@ Reference parity:
   - read_csv  -> notebooks/index.Rmd:56,69,433 (read.csv; multiline quoted
     GeoJSON fields — 25,123 physical lines for 243 records)
   - read_tsv  -> notebooks/index.Rmd:531
-  - read_excel-> notebooks/index.Rmd:135,547 (read.xlsx sheet 1) — gated: no
-    xlsx lib in this environment; a pandas bridge is used when available
+  - read_excel-> notebooks/index.Rmd:135,547 (read.xlsx sheet 1) — the
+    bundled stdlib xlsx reader (sources/xlsx.py)
   - list_files-> notebooks/index.Rmd:472-474 (recursive .shp listing)
 
 Scale notes: CSV with multiLine=True cannot be split within a file (each file
@@ -83,35 +83,28 @@ def read_orc(spark: SparkSession, path: str, columns: list[str] | None = None) -
 def read_excel(spark: SparkSession, path: str, sheet: int = 0) -> DataFrame:
     """S4: Excel scan (reference read.xlsx, notebooks/index.Rmd:135,547).
     Driver-side by design — xlsx files are dimension-scale configuration
-    inputs. Uses pandas' xlsx engine when one is installed; otherwise the
-    bundled pure-stdlib reader (sources/xlsx.py), so the path is runnable
-    with no optional dependencies. All-numeric columns arrive as double,
-    everything else as string with blank cells null (R read.xlsx's
-    numeric-or-character column typing)."""
-    try:
-        import pandas as pd
+    inputs — read by the bundled pure-stdlib reader (sources/xlsx.py), so
+    the path needs no optional dependency. All-numeric columns arrive as
+    double, everything else as string with blank cells null (R read.xlsx's
+    numeric-or-character column typing).
 
-        pdf = pd.read_excel(path, sheet_name=sheet)
-        return spark.createDataFrame(pdf)
-    except ImportError:
-        from bioeco_portal_etl_spark.sources.xlsx import read_xlsx_table
+    The rows reach Spark as one Arrow table, so the frame plans as a local
+    relation (LocalTableScan) and never starts a Python worker."""
+    import pyarrow as pa
+    from pyspark.sql.types import DoubleType, StringType, StructField, StructType
 
-        header, body = read_xlsx_table(path, sheet)
-        from pyspark.sql.types import (
-            DoubleType,
-            StringType,
-            StructField,
-            StructType,
-        )
+    from bioeco_portal_etl_spark.sources.xlsx import read_xlsx_table
 
-        fields = []
-        for j, name in enumerate(header):
-            vals = [r[j] for r in body if r[j] is not None]
-            numeric = bool(vals) and all(isinstance(v, float) for v in vals)
-            fields.append(
-                StructField(name, DoubleType() if numeric else StringType(), True)
-            )
-        return spark.createDataFrame(body, StructType(fields))
+    header, body = read_xlsx_table(path, sheet)
+    arrays, fields = [], []
+    for j, name in enumerate(header):
+        col = [r[j] for r in body]
+        vals = [v for v in col if v is not None]
+        numeric = bool(vals) and all(isinstance(v, float) for v in vals)
+        arrays.append(pa.array(col, pa.float64() if numeric else pa.string()))
+        fields.append(StructField(name, DoubleType() if numeric else StringType(), True))
+    table = pa.Table.from_arrays(arrays, names=header)
+    return spark.createDataFrame(table, StructType(fields))
 
 
 def list_files(root: str, pattern: str = "*.shp", recursive: bool = True) -> list[str]:

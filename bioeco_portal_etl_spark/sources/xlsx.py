@@ -1,5 +1,5 @@
-"""Minimal pure-stdlib XLSX reader — S4's engine when no pandas xlsx
-backend (openpyxl/xlrd) is installed.
+"""Minimal pure-stdlib XLSX reader — S4's engine (``files.read_excel``),
+needing no xlsx library (openpyxl/xlrd).
 
 Reference parity: R ``read.xlsx(path, 1)`` at notebooks/index.Rmd:135
 (EuroSea) and :547 (WESPAS positions). XLSX is a zip of XML parts; this
@@ -87,28 +87,32 @@ def _cell_value(c, shared: list[str]):
 
 def read_xlsx_rows(path: str, sheet: int = 0) -> list[list]:
     """The n-th worksheet as dense rows (None for absent cells), trailing
-    all-None cells trimmed per row; rows keep their sheet order."""
-    with zipfile.ZipFile(path) as z:
-        shared = _shared_strings(z)
-        root = ET.fromstring(z.read(_sheet_path(z, sheet)))
-        rows: list[list] = []
-        for row in root.findall("m:sheetData/m:row", _NS):
-            out: list = []
-            for c in row.findall("m:c", _NS):
-                ref = c.get("r", "")
-                m = _CELL_REF.match(ref)
-                idx = _col_index(m.group(1)) if m else len(out)
-                while len(out) < idx:
-                    out.append(None)
-                val = _cell_value(c, shared)
-                if len(out) == idx:
-                    out.append(val)
-                else:  # defensive: duplicate/odd refs — last write wins
-                    out[idx] = val
-            while out and out[-1] is None:
-                out.pop()
-            rows.append(out)
-        return rows
+    all-None cells trimmed per row; rows keep their sheet order. A file
+    that is not an xlsx zip raises ValueError."""
+    try:
+        with zipfile.ZipFile(path) as z:
+            shared = _shared_strings(z)
+            root = ET.fromstring(z.read(_sheet_path(z, sheet)))
+    except (zipfile.BadZipFile, KeyError) as e:  # not a zip / no workbook part
+        raise ValueError(f"{path} is not an xlsx workbook: {e}") from e
+    rows: list[list] = []
+    for row in root.findall("m:sheetData/m:row", _NS):
+        out: list = []
+        for c in row.findall("m:c", _NS):
+            ref = c.get("r", "")
+            m = _CELL_REF.match(ref)
+            idx = _col_index(m.group(1)) if m else len(out)
+            while len(out) < idx:
+                out.append(None)
+            val = _cell_value(c, shared)
+            if len(out) == idx:
+                out.append(val)
+            else:  # defensive: duplicate/odd refs — last write wins
+                out[idx] = val
+        while out and out[-1] is None:
+            out.pop()
+        rows.append(out)
+    return rows
 
 
 def _fmt(v) -> str:

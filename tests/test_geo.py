@@ -5,16 +5,20 @@ from __future__ import annotations
 
 import json
 import math
+import random
 
 import numpy as np
+import pytest
 
 from bioeco_portal_etl_spark.geo.crs import _utm_to_wgs84_np, utm_to_wgs84
 from bioeco_portal_etl_spark.geo.geojson import (
+    _geojson_geom_to_wkt,
     explode_feature_collection,
     geojson_geom_type,
     geojson_to_wkt,
     point_geojson,
 )
+from bioeco_portal_etl_spark.geo.shapefile import parse_wkt
 
 FC = json.dumps(
     {
@@ -70,6 +74,160 @@ def test_geojson_to_wkt_types(spark):
     assert rows[1].wkt == "LINESTRING (0 0, 1 1)"
     assert rows[2].wkt.startswith("POLYGON ((0 0, 1 0, 1 1, 0 0))")
     assert rows[3].wkt is None and rows[3].t is None
+
+
+def _ref_wkt(s):
+    """The pure-Python rendering: None where it cannot render the input."""
+    if s is None:
+        return None
+    try:
+        return _geojson_geom_to_wkt(json.loads(s))
+    except (ValueError, TypeError, IndexError, KeyError, AttributeError):
+        return None
+
+
+def _spark_wkt(spark, inputs):
+    df = spark.createDataFrame([(i, g) for i, g in enumerate(inputs)], "i int, g string")
+    rows = df.select("i", geojson_to_wkt("g").alias("w")).collect()
+    return [r.w for r in sorted(rows, key=lambda r: r.i)]
+
+
+WKT_CASES = [
+    ('{"type":"Point","coordinates":[2.5,41.0]}', "POINT (2.5 41.0)"),
+    ('{"type":"MultiPoint","coordinates":[[1.5,2.5],[-3.25,4.0]]}', "MULTIPOINT (1.5 2.5, -3.25 4.0)"),
+    ('{"type":"LineString","coordinates":[[0.5,0.5],[1.5,1.5]]}', "LINESTRING (0.5 0.5, 1.5 1.5)"),
+    (
+        '{"type":"MultiLineString","coordinates":[[[0.5,0.5],[1.5,1.5]],[[2.5,2.5],[3.5,3.5]]]}',
+        "MULTILINESTRING ((0.5 0.5, 1.5 1.5), (2.5 2.5, 3.5 3.5))",
+    ),
+    (
+        '{"type":"Polygon","coordinates":[[[0.0,0.0],[4.0,0.0],[4.0,4.0],[0.0,0.0]],'
+        '[[1.0,1.0],[2.0,1.0],[2.0,2.0],[1.0,1.0]]]}',
+        "POLYGON ((0.0 0.0, 4.0 0.0, 4.0 4.0, 0.0 0.0), (1.0 1.0, 2.0 1.0, 2.0 2.0, 1.0 1.0))",
+    ),
+    (
+        '{"type":"MultiPolygon","coordinates":[[[[0.0,0.0],[1.0,0.0],[1.0,1.0],[0.0,0.0]]],'
+        '[[[5.0,5.0],[6.0,5.0],[6.0,6.0],[5.0,5.0]]]]}',
+        "MULTIPOLYGON (((0.0 0.0, 1.0 0.0, 1.0 1.0, 0.0 0.0)), ((5.0 5.0, 6.0 5.0, 6.0 6.0, 5.0 5.0)))",
+    ),
+    # integer, negative and negative-zero coordinates
+    ('{"type":"Polygon","coordinates":[[[0,0],[1,0],[1,1],[0,0]]]}', "POLYGON ((0 0, 1 0, 1 1, 0 0))"),
+    ('{"type":"Point","coordinates":[-170,-80]}', "POINT (-170 -80)"),
+    ('{"type":"Point","coordinates":[-0.0,-12.75]}', "POINT (-0.0 -12.75)"),
+    # 3-D positions: z is dropped
+    ('{"type":"Point","coordinates":[1.5,2.5,10.0]}', "POINT (1.5 2.5)"),
+    ('{"type":"LineString","coordinates":[[0,0,1],[1,1,2]]}', "LINESTRING (0 0, 1 1)"),
+    # whitespace and key order in the input, lower-case type
+    ('{ "coordinates" : [ 3 , 4 ] ,\n "type" : "point" }', "POINT (3 4)"),
+    ('{"type":"Point","coordinates":[]}', "POINT EMPTY"),
+    (
+        '{"type":"GeometryCollection","geometries":[{"type":"Point","coordinates":[1,2]},'
+        '{"type":"LineString","coordinates":[[0,0],[1,1]]}]}',
+        "GEOMETRYCOLLECTION (POINT (1 2), LINESTRING (0 0, 1 1))",
+    ),
+    ('{"type":"GeometryCollection","geometries":[]}', "GEOMETRYCOLLECTION ()"),
+    # no geometry
+    (None, None),
+    ("null", None),
+    ('{"type":"Point","coordinates":[1,', None),
+    ("not json", None),
+    ('{"coordinates":[1,2]}', None),
+    ('{"type":"Circle","coordinates":[1,2]}', None),
+    ('{"type":"Circle","coordinates":[]}', None),
+    # coordinates that do not fit the type
+    ('{"type":"Point","coordinates":[5]}', None),
+    ('{"type":"Polygon","coordinates":[[0,0],[1,1]]}', None),
+    ('{"type":"LineString","coordinates":[[0,0],1]}', None),
+    (
+        '{"type":"GeometryCollection","geometries":[{"type":"Point","coordinates":[1,2]},'
+        '{"type":"Circle","coordinates":[1,2]}]}',
+        None,
+    ),
+]
+
+
+def test_geojson_to_wkt_table(spark):
+    """Every case renders as the pure-Python reference does, text for text."""
+    inputs = [g for g, _ in WKT_CASES]
+    got = _spark_wkt(spark, inputs)
+    for (g, want), w in zip(WKT_CASES, got):
+        assert _ref_wkt(g) == want, g
+        assert w == want, g
+
+
+def test_geojson_geom_type_table(spark):
+    df = spark.createDataFrame(
+        [(i, g) for i, (g, _) in enumerate(WKT_CASES)], "i int, g string"
+    )
+    got = {r.i: r.t for r in df.select("i", geojson_geom_type("g").alias("t")).collect()}
+    for i, (g, _) in enumerate(WKT_CASES):
+        try:
+            obj = json.loads(g) if g is not None else None
+        except ValueError:
+            obj = None
+        want = obj["type"].upper() if isinstance(obj, dict) and "type" in obj else None
+        assert got[i] == want, g
+
+
+def test_geojson_to_wkt_nested_collection_is_null(spark):
+    """Collections are rendered one level deep: a nested collection gives
+    null (RFC 7946 §3.1.8 discourages nesting); the Python reference
+    recurses."""
+    g = (
+        '{"type":"GeometryCollection","geometries":[{"type":"GeometryCollection",'
+        '"geometries":[{"type":"Point","coordinates":[1,2]}]}]}'
+    )
+    assert _spark_wkt(spark, [g]) == [None]
+    assert _ref_wkt(g) == "GEOMETRYCOLLECTION (GEOMETRYCOLLECTION (POINT (1 2)))"
+
+
+def _random_geometry(rng, num):
+    def pos():
+        return [num(), num()]
+
+    def ring(n):
+        return [pos() for _ in range(n)]
+
+    kind = rng.choice(["Point", "MultiPoint", "LineString", "MultiLineString", "Polygon", "MultiPolygon"])
+    coords = {
+        "Point": lambda: pos(),
+        "MultiPoint": lambda: ring(rng.randint(1, 4)),
+        "LineString": lambda: ring(rng.randint(2, 5)),
+        "MultiLineString": lambda: [ring(rng.randint(2, 4)) for _ in range(rng.randint(1, 3))],
+        "Polygon": lambda: [ring(rng.randint(4, 6)) for _ in range(rng.randint(1, 3))],
+        "MultiPolygon": lambda: [[ring(4)] for _ in range(rng.randint(1, 3))],
+    }[kind]()
+    return json.dumps({"type": kind, "coordinates": coords})
+
+
+def test_geojson_to_wkt_positional_parity(spark):
+    """Integers and |x| in [1e-3, 1e7) print positionally on both sides
+    (Java Double.toString, Python repr): the WKT text must be identical.
+    Every perfbench and reference input lies in this range."""
+    rng = random.Random(7)
+
+    def num():
+        r = rng.random()
+        if r < 0.3:
+            return rng.randint(-180, 180)
+        x = 10 ** rng.uniform(-3, 7) * rng.choice([1, -1])
+        return round(x, rng.randint(0, 8)) if r < 0.6 else x
+
+    inputs = [_random_geometry(rng, num) for _ in range(2000)]
+    got = _spark_wkt(spark, inputs)
+    bad = [(g, w) for g, w in zip(inputs, got) if w != _ref_wkt(g)]
+    assert not bad, bad[:3]
+
+
+@pytest.mark.parametrize("x", [1e-5, -2.5e-4, 1.0123456e7, -3e12, 1e21, 5e-324])
+def test_geojson_to_wkt_exponent_numbers_parse_alike(spark, x):
+    """Outside [1e-3, 1e7) Jackson prints exponent form (1.0E-5) where
+    Python prints 1e-05: the text differs, the doubles the shapefile
+    writer reads from it do not."""
+    g = json.dumps({"type": "LineString", "coordinates": [[x, 1.5], [2.5, x]]})
+    (w,) = _spark_wkt(spark, [g])
+    assert "E" in w
+    assert parse_wkt(w) == parse_wkt(_ref_wkt(g))
 
 
 def test_point_geojson_null_pairing(spark):

@@ -208,3 +208,19 @@ def test_in_obis_script(frames):
         "update layers_layer set data_in_obis = 'N' where name = 'Seagrass Net';",
         "update layers_layer set data_in_obis = 'Y' where name = 'Coral Watch';",
     ]
+
+
+def test_in_obis_statements_follow_id_order(frames):
+    """Programs may share a name with different statuses, so statement order
+    decides which update wins: it follows ``id``, whatever the partitioning."""
+    status = {"Yes, all data.": "Y", "No.": "N"}
+    combined = frames["combined"]
+    lists = [
+        [r.stmt for r in in_obis_statements(combined.repartition(n), status).collect()]
+        for n in (1, 7)
+    ]
+    assert lists[0] == lists[1]
+    names = [r["name"] for r in combined.orderBy("id").collect()]
+    assert [s.rsplit(" where name = ", 1)[1] for s in lists[0]] == [
+        f"'{n}';" for n in names
+    ]
